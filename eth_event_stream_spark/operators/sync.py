@@ -31,8 +31,15 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
+def signature_key(address: str, topic0: str) -> str:
+    """StreamSignature (sink.rs:34-42) as the string key ``addr|topic0``,
+    lowercased — the value ``signature_col`` computes for a row."""
+    return f"{address.lower()}|{topic0.lower()}"
+
+
 def signature_col(address: Column | None = None, topic0: Column | None = None) -> Column:
-    """StreamSignature (sink.rs:34-42) as a single string key ``addr|topic0``."""
+    """StreamSignature (sink.rs:34-42) as a single string key ``addr|topic0``
+    (the column form of ``signature_key``)."""
     address = address if address is not None else F.col("address")
     topic0 = topic0 if topic0 is not None else F.element_at(F.col("topics"), 1)
     return F.concat_ws("|", F.lower(address), F.lower(topic0))
@@ -47,7 +54,7 @@ def tag_signature(df: DataFrame, streams: list[tuple[str, str]] | None = None) -
     """
     out = df.withColumn("sig", signature_col())
     if streams is not None:
-        keys = [f"{a.lower()}|{t.lower()}" for a, t in streams]
+        keys = [signature_key(a, t) for a, t in streams]
         out = out.filter(F.col("sig").isin(keys))
     return out
 

@@ -1021,8 +1021,9 @@ def vector_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ encode: every 64-dim vector compressed to PQ_M=8 codebook indices
     (8 bytes/vector instead of 256 — the memory step that makes
     billion-vector search fit a cluster). Static codebook from the PQ_K
-    seed vectors; assignment via broadcast join + min_by partial agg with
-    (dist, j) tie-breaks — deterministic, so DuckDB replays it exactly."""
+    seed vectors; assignment is the ``_pq_codes`` Arrow kernel (one
+    ``mapInArrow`` pass, NumPy argmin over the encoded (dist, j) key) —
+    deterministic, so DuckDB replays it exactly."""
     codes, _, _ = _pq_codes(spark, sf_dir)
     return codes.groupBy("vec_id").agg(
         F.transform(

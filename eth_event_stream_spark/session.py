@@ -14,6 +14,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half of physical memory (``MemTotal``), capped at 48g, so a heavy job
+    cannot push the driver heap past what the host has."""
+    try:
+        with open("/proc/meminfo") as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{min(kib // 2048, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "eth_event_stream_spark",
     cpus: int | None = None,
@@ -40,7 +51,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # let WHERE clauses reach Python data sources' pushFilters
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Files: keep scan partitions big enough to amortize task overhead
         # locally; on a 100 TB cluster the default 128m is right.

@@ -9,9 +9,10 @@ Python ``DataSource`` over a log table (parquet) standing in for the chain:
   chunks still move the watermark, exactly the reference's punctuation
   (put_multiple end_block, sink.rs:253-263).
 - per-trigger advance is capped at ``block_step`` blocks (S2 chunking;
-  default 1000 = stream.rs:119), and each micro-batch splits into
-  one task per ``block_step`` range — Spark parallelizes what the
-  reference fetches sequentially (stream.rs:214-226).
+  default 1000 = stream.rs:119), and every read — micro-batch or batch
+  scan — splits into one task per ``block_step`` range, cut on absolute
+  multiples of ``block_step`` — Spark parallelizes what the reference
+  fetches sequentially (stream.rs:214-226).
 - ``removed`` logs fail the read by default (S7 reorg policy,
   stream.rs:174-181); ``fail_on_removed=false`` drops them instead.
 - a bounded ``[from_block, to_block]`` plus ``Trigger.AvailableNow`` is the
@@ -26,10 +27,17 @@ Two interchangeable transports behind the same options/semantics:
 ``rpc_url`` talks live JSON-RPC (``eth_getLogs`` per chunk +
 ``eth_blockNumber`` for the head — sources/rpc.py, the reference's real
 I/O). Chunking, pushdown, retry, and reorg policy are identical on both.
+
+One reader core, ``_EthLogReader``, holds that policy for both readers:
+option parsing, the chunk rule, transport dispatch and the retry loop are
+written once. ``EthLogStreamReader`` adds only its offsets (the live tail
+or an AvailableNow drain); ``EthLogBatchReader`` adds only filter pushdown
+and its choice of range (the historical drain as a batch scan).
 """
 
 from __future__ import annotations
 
+import time
 from dataclasses import dataclass
 from typing import Iterator
 
@@ -112,9 +120,7 @@ def _chain_head(path: str) -> int:
             mx = stats.max
             head = mx if head is None else max(head, mx)
     if head is None:  # stats missing: fall back to a scan of the one column
-        import pyarrow.parquet as pq2
-
-        tbl = pq2.read_table(path, columns=["block_number"])
+        tbl = pq.read_table(path, columns=["block_number"])
         head = max(tbl.column(0).to_pylist())
     return int(head)
 
@@ -127,35 +133,34 @@ def _fetch_table(path: str, flt: list):
     return pq.read_table(path, filters=flt)
 
 
-def _fetch_with_retry(path: str, flt: list, attempts: int, base_s: float):
-    """Exponential-backoff retry around the fetch — the reference's S6
-    policy (stream.rs:148-155, data_feed/block.rs:25-26: 10 ms base,
-    doubling). ``attempts`` counts TOTAL calls (4 by default); the
-    reference's ``Retry::spawn`` with ``.take(4)`` performs an initial call
-    plus 4 retries = 5 total — an intentional off-by-one difference kept
-    because "4 attempts" reads as 4 calls in options. Re-raises the last
-    error once attempts are exhausted; a real RPC gateway source drops in
-    here unchanged.
-
-    Only transient I/O errors are retried (OSError covers
-    pyarrow.lib.ArrowIOError). Deterministic failures surface immediately
-    without backoff: non-OSError (bad filter, schema mismatch, programming
-    errors) and FileNotFoundError — an OSError subclass, but a missing path
-    never heals, so burning the backoff budget on it only delays the
-    report."""
-    import time
-
-    attempt = 0
+def _retry(call, is_transient, attempts: int, base_s: float):
+    """Exponential-backoff retry around one transport call — the reference's
+    S6 policy (stream.rs:148-155, data_feed/block.rs:25-26: 10 ms base,
+    doubling), the one loop both transports use. ``attempts`` counts TOTAL
+    calls (4 by default); the reference's ``Retry::spawn`` with ``.take(4)``
+    performs an initial call plus 4 retries = 5 total — an intentional
+    off-by-one difference kept because "4 attempts" reads as 4 calls in
+    options. An error ``is_transient`` rejects surfaces at once, without
+    backoff; the last transient error is re-raised once attempts are
+    exhausted."""
+    attempt = 1
     while True:
         try:
-            return _fetch_table(path, flt)
-        except FileNotFoundError:
-            raise  # deterministic: a bad path never becomes readable
-        except OSError:
-            attempt += 1
-            if attempt >= attempts:
+            return call()
+        except Exception as e:
+            if attempt >= attempts or not is_transient(e):
                 raise
-            time.sleep(base_s * (2 ** (attempt - 1)))
+        time.sleep(base_s * 2 ** (attempt - 1))
+        attempt += 1
+
+
+def _transient_io(e: Exception) -> bool:
+    """Parquet transport: only transient I/O errors are retried (OSError
+    covers pyarrow.lib.ArrowIOError). Non-OSError (bad filter, schema
+    mismatch, programming errors) is deterministic, and so is
+    FileNotFoundError — an OSError subclass, but a missing path never heals,
+    so burning the backoff budget on it only delays the report."""
+    return isinstance(e, OSError) and not isinstance(e, FileNotFoundError)
 
 
 def _post_filter(
@@ -215,7 +220,9 @@ def _read_range(
     flt = [("block_number", ">=", lo), ("block_number", "<", hi)]
     if address is not None:
         flt.append(("address", "=", address if address_exact else address.lower()))
-    tbl = _fetch_with_retry(path, flt, retry_attempts, retry_base_s)
+    tbl = _retry(
+        lambda: _fetch_table(path, flt), _transient_io, retry_attempts, retry_base_s
+    )
     cols = {name: tbl.column(name).to_pylist() for name in _COLS}
     rows = (
         tuple(cols[name][i] for name in _COLS)
@@ -243,34 +250,25 @@ def _read_range_rpc(
     address/topic0 filter server-side; ``_post_filter`` re-checks both so
     the source's exact/lowercase address contract holds regardless of node
     case behavior (real nodes compare 20-byte binary, i.e. caseless)."""
-    import time
-
     fetcher = JsonRpcLogFetcher(rpc_url)
     send_addr = None if address is None else (address if address_exact else address.lower())
-    attempt = 0
-    while True:
-        try:
-            rows = fetcher.get_logs(lo, hi - 1, address=send_addr, topic0=topic0)
-            break
-        except TransientRpcError:
-            attempt += 1
-            if attempt >= retry_attempts:
-                raise
-            time.sleep(retry_base_s * (2 ** (attempt - 1)))
+    rows = _retry(
+        lambda: fetcher.get_logs(lo, hi - 1, address=send_addr, topic0=topic0),
+        lambda e: isinstance(e, TransientRpcError),
+        retry_attempts,
+        retry_base_s,
+    )
     return _post_filter(
         rows, topic0, fail_on_removed, address=address, address_exact=address_exact
     )
 
 
-def _head_of(path: str | None, rpc_url: str | None) -> int:
-    """Chain head from whichever backend is configured: parquet footer
-    stats (the test stand-in) or a live eth_blockNumber call (S5)."""
-    if rpc_url is not None:
-        return JsonRpcLogFetcher(rpc_url).block_number()
-    return _chain_head(path)
+class _EthLogReader:
+    """The reader core both readers inherit, so the historical drain and the
+    live tail share one policy: option parsing, the chunk rule, the
+    transport dispatch in ``read`` and (inside the transports) the S6 retry
+    loop are each written once."""
 
-
-class EthLogStreamReader(DataSourceStreamReader):
     def __init__(self, options: dict):
         self.rpc_url = options.get("rpc_url")
         self.path = options.get("path")
@@ -283,8 +281,67 @@ class EthLogStreamReader(DataSourceStreamReader):
         self.address = options.get("address")
         self.topic0 = options.get("topic0")
         self.fail_on_removed = str(options.get("fail_on_removed", "true")).lower() == "true"
+        self.pushdown_enabled = str(options.get("pushdown", "false")).lower() == "true"
         self.retry_attempts = int(options.get("retry_attempts", 4))
         self.retry_base_s = float(options.get("retry_base_ms", 10)) / 1000.0
+
+    def _head(self) -> int:
+        """Chain head from whichever transport is configured: parquet footer
+        stats (the test stand-in) or a live eth_blockNumber call (S5)."""
+        if self.rpc_url is not None:
+            return JsonRpcLogFetcher(self.rpc_url).block_number()
+        return _chain_head(self.path)
+
+    def _chunks(
+        self, lo: int, hi: int, address: str | None, address_exact: bool = False
+    ) -> list[BlockRangePartition]:
+        """One partition per fetch chunk of [lo, hi), cut on ABSOLUTE
+        ``block_step`` multiples: the first chunk may be short, every later
+        one ends on a multiple. Alignment makes a replayed range map exactly
+        onto block-bucket partition overwrite downstream
+        (sinks.write_block_partitioned with bucket_blocks == block_step) —
+        idempotent file output for free.
+
+        An empty range (e.g. pushed predicates ``block_number = 5`` with
+        ``from_block = 10``) yields one empty sentinel chunk. An empty
+        partition list is NOT safe: PySpark substitutes [None] and calls
+        read(None)."""
+        if hi <= lo:
+            return [BlockRangePartition(lo, lo, address, address_exact)]
+        step = self.block_step
+        bounds = [lo, *range((lo // step + 1) * step, hi, step), hi]
+        return [
+            BlockRangePartition(a, b, address, address_exact)
+            for a, b in zip(bounds, bounds[1:])
+        ]
+
+    def read(self, partition: BlockRangePartition) -> Iterator[tuple]:
+        # belt-and-braces for the empty-range sentinel (and for a None
+        # partition should a PySpark version hand one through anyway)
+        if partition is None or partition.hi <= partition.lo:
+            return iter(())
+        if self.rpc_url is not None:
+            read_fn, target = _read_range_rpc, self.rpc_url
+        else:
+            read_fn, target = _read_range, self.path
+        return read_fn(
+            target,
+            partition.lo,
+            partition.hi,
+            partition.address,
+            self.topic0,
+            self.fail_on_removed,
+            address_exact=partition.address_exact,
+            retry_attempts=self.retry_attempts,
+            retry_base_s=self.retry_base_s,
+        )
+
+
+class EthLogStreamReader(_EthLogReader, DataSourceStreamReader):
+    """Live tail (or an AvailableNow drain): offsets are the block frontier."""
+
+    def __init__(self, options: dict):
+        super().__init__(options)
         self._current = self.from_block
 
     # offsets are dicts {"block": next_unread_block}
@@ -292,15 +349,11 @@ class EthLogStreamReader(DataSourceStreamReader):
         return {"block": self.from_block}
 
     def latestOffset(self) -> dict:
-        head = _head_of(self.path, self.rpc_url)
-        safe = head - self.confirmations  # S3 confirmation lag
+        safe = self._head() - self.confirmations  # S3 confirmation lag
         if self.to_block is not None:
             safe = min(safe, self.to_block)
-        # per-trigger cap (S2), ALIGNED to absolute block_step multiples: the
-        # first chunk may be short, every later chunk ends on a multiple.
-        # Alignment makes micro-batch replay map exactly onto block-bucket
-        # partition overwrite downstream (sinks.write_block_partitioned with
-        # bucket_blocks == block_step) — idempotent file output for free.
+        # per-trigger cap (S2), aligned like _chunks: advance at most to the
+        # next absolute block_step multiple
         aligned_next = (self._current // self.block_step + 1) * self.block_step
         nxt = min(safe + 1, aligned_next)
         nxt = max(nxt, self._current)  # never regress
@@ -313,68 +366,15 @@ class EthLogStreamReader(DataSourceStreamReader):
         # never let the in-memory frontier lag behind it (otherwise a restart
         # pays one empty catch-up batch per block_step chunk)
         self._current = max(self._current, lo, hi)
-        if hi <= lo:
-            return [BlockRangePartition(lo, lo)]
-        step = self.block_step
-        # chunk on absolute step boundaries (same alignment as latestOffset)
-        bounds = [lo]
-        b = (lo // step + 1) * step
-        while b < hi:
-            bounds.append(b)
-            b += step
-        bounds.append(hi)
-        return [
-            BlockRangePartition(bounds[i], bounds[i + 1])
-            for i in range(len(bounds) - 1)
-        ]
-
-    def read(self, partition: BlockRangePartition) -> Iterator[tuple]:
-        if partition is None or partition.hi <= partition.lo:
-            return iter(())
-        if self.rpc_url is not None:
-            return _read_range_rpc(
-                self.rpc_url,
-                partition.lo,
-                partition.hi,
-                self.address,
-                self.topic0,
-                self.fail_on_removed,
-                retry_attempts=self.retry_attempts,
-                retry_base_s=self.retry_base_s,
-            )
-        return _read_range(
-            self.path,
-            partition.lo,
-            partition.hi,
-            self.address,
-            self.topic0,
-            self.fail_on_removed,
-            retry_attempts=self.retry_attempts,
-            retry_base_s=self.retry_base_s,
-        )
+        return self._chunks(lo, hi, self.address)
 
     def commit(self, end: dict) -> None:
         pass  # offset log persistence is Spark's checkpoint
 
 
-class EthLogBatchReader(DataSourceReader):
+class EthLogBatchReader(_EthLogReader, DataSourceReader):
     """Bounded historical read (the stream_historical_logs drain) as a batch
     scan: one task per block_step chunk, same pushdown."""
-
-    def __init__(self, options: dict):
-        self.rpc_url = options.get("rpc_url")
-        self.path = options.get("path")
-        if self.path is None and self.rpc_url is None:
-            raise ValueError("eth_logs source needs a 'path' or 'rpc_url' option")
-        self.from_block = int(options.get("from_block", 0))
-        self.to_block = int(options["to_block"]) if "to_block" in options else None
-        self.block_step = int(options.get("block_step", 1000))
-        self.address = options.get("address")
-        self.topic0 = options.get("topic0")
-        self.fail_on_removed = str(options.get("fail_on_removed", "true")).lower() == "true"
-        self.pushdown_enabled = str(options.get("pushdown", "false")).lower() == "true"
-        self.retry_attempts = int(options.get("retry_attempts", 4))
-        self.retry_base_s = float(options.get("retry_base_ms", 10)) / 1000.0
 
     # per-query pushdown: (lo, hi, addr, addr_is_pushed)
     _pending: tuple[int, int | None, str | None, bool] | None = None
@@ -434,43 +434,9 @@ class EthLogBatchReader(DataSourceReader):
             lo, to_b, addr, addr_exact = self._pending
             self._pending = None  # consumed: next (filterless) query is clean
         else:
-            lo, to_b, addr, addr_exact = (
-                self.from_block,
-                self.to_block,
-                self.address,
-                False,
-            )
-        hi = (to_b if to_b is not None else _head_of(self.path, self.rpc_url)) + 1
-        step = self.block_step
-        if hi <= lo:
-            # pushed predicates can narrow the range to empty (e.g.
-            # block_number = 5 with from_block = 10). An empty partition
-            # list is NOT safe: PySpark substitutes [None] and calls
-            # read(None). Return one empty sentinel chunk instead — the
-            # same hi<=lo convention the stream reader uses.
-            return [BlockRangePartition(lo, lo, addr, addr_exact)]
-        return [
-            BlockRangePartition(b, min(b + step, hi), addr, addr_exact)
-            for b in range(lo, hi, step)
-        ]
-
-    def read(self, partition: BlockRangePartition) -> Iterator[tuple]:
-        # belt-and-braces for the empty-range sentinel (and for a None
-        # partition should a PySpark version hand one through anyway)
-        if partition is None or partition.hi <= partition.lo:
-            return iter(())
-        read_fn = _read_range_rpc if self.rpc_url is not None else _read_range
-        return read_fn(
-            self.rpc_url if self.rpc_url is not None else self.path,
-            partition.lo,
-            partition.hi,
-            partition.address,
-            self.topic0,
-            self.fail_on_removed,
-            address_exact=partition.address_exact,
-            retry_attempts=self.retry_attempts,
-            retry_base_s=self.retry_base_s,
-        )
+            lo, to_b, addr, addr_exact = self.from_block, self.to_block, self.address, False
+        hi = (to_b if to_b is not None else self._head()) + 1
+        return self._chunks(lo, hi, addr, addr_exact)
 
 
 class EthLogDataSource(DataSource):

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.schema import EventSchema, parse_event_declaration
+from ..operators.sync import dedup_logs, signature_key
 from .block_source import register as _register_source
 
 
@@ -32,7 +33,7 @@ class StreamHandle:
     @property
     def signature(self) -> str:
         """StreamSignature (sink.rs:34-42) as the string key ``addr|topic0``."""
-        return f"{self.address.lower()}|{self.event.topic0}"
+        return signature_key(self.address, self.event.topic0)
 
 
 @dataclass
@@ -97,4 +98,4 @@ class StreamFactory:
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d)
-        return out.dropDuplicates(["sig", "block_number", "log_index"])
+        return dedup_logs(out)

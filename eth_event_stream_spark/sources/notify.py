@@ -8,10 +8,11 @@ with exponential backoff (block.rs:25-26: 10 ms base, 5 attempts per
 connect round).
 
 Spark disposition: on the micro-batch execution model the engine's own
-trigger loop polls ``latestOffset()`` (sources/block_source.py:287-301), so
-a push feed cannot make BATCHES start earlier — trigger cadence bounds
-ingest latency regardless. What a head feed IS for here is DRIVER-SIDE
-orchestration, the same role the reference's consumers use it for:
+trigger loop polls ``EthLogStreamReader.latestOffset()``
+(sources/block_source.py), so a push feed cannot make BATCHES start
+earlier — trigger cadence bounds ingest latency regardless. What a head
+feed IS for here is DRIVER-SIDE orchestration, the same role the
+reference's consumers use it for:
 
 - ``wait_for(target)`` — block until the chain reaches a height (the B5
   barrier at head level: start a bounded drain once the range is minable);

@@ -8,12 +8,16 @@ Spark decomposition (SURVEY §7.4.3):
 
 - **Algebraic folds** (netflow, counters) degenerate to ``groupBy().agg()`` —
   use the plans layer; never pay for ordered state you don't need.
-- **Order-dependent / general state** uses this module:
-  - streaming: ``applyInPandasWithState`` keyed by a partition key, each
-    micro-batch delivering block-sorted rows to ``EventReducer.reduce``;
-  - batch: ``applyInPandas`` over the same key with an in-group sort — the
-    identical reducer code runs in both (the reference's historical/live
-    unification).
+- **Order-dependent / general state** uses this module, one driver per mode:
+  - streaming: ``reduce_events_stream`` — ``applyInPandasWithState`` keyed
+    by a partition key, each micro-batch delivering block-sorted rows to
+    ``EventReducer.reduce`` (no dependency beyond pandas/pyarrow);
+  - batch: ``reduce_events_batch`` — ``applyInPandas`` over the same key
+    with an in-group sort. The identical reducer code runs in both (the
+    reference's historical/live unification);
+  - ``reduce_events_batch_arrow`` runs an ``ArrowEventReducer`` (the same
+    contract over ``pyarrow.Table``) on ``applyInArrow``, skipping the
+    pandas conversion.
 
 State is partitioned by ``key_cols`` — the scale contract: the reference's
 single ``Arc<Mutex<State>>`` becomes N independent shards; anything global
@@ -129,46 +133,14 @@ def reduce_events_batch(
     return df.groupBy(*key_cols).applyInPandas(fn, schema=reducer.output_schema())
 
 
-class NetflowReducer(EventReducer):
+class CentsNetflowReducer(EventReducer):
     """The reference's flagship reducer (examples/stream_multi.rs:33-70):
     per-key net value flow plus the event counter, as explicit state.
-
-    Exists to exercise the stateful path; the production shape for this
-    particular (algebraic) fold is plans.eventflow.flagship_user_netflow.
-    Expects columns: value (double), sign (+1/-1), block_number, log_index.
-    """
-
-    def init_state(self):
-        return {"net": 0.0, "n": 0}
-
-    def reduce(self, state, events: pd.DataFrame):
-        state["net"] += float((events["value"] * events["sign"]).sum())
-        state["n"] += int(len(events))
-        return state
-
-    def emit(self, key, state) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"key": [key[0]], "netflow": [state["net"]], "n_events": [state["n"]]}
-        )
-
-    def state_schema(self) -> StructType:
-        return StructType.fromDDL("net DOUBLE, n BIGINT")
-
-    def output_schema(self) -> StructType:
-        return StructType.fromDDL("key BIGINT, netflow DOUBLE, n_events BIGINT")
-
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["net"], state["n"])]
-
-    def rows_to_state(self, rows) -> Any:
-        return {"net": rows[0][0], "n": rows[0][1]}
-
-
-class CentsNetflowReducer(EventReducer):
-    """NetflowReducer with exact integer-cents state — cross-engine-exact
-    (the oracle-checkable variant; SURVEY §7.4.1's "do no worse than the
-    reference's lossy i128" applied to doubles). Expects columns: value
-    (double, 2-decimal), sign (+1/-1)."""
+    The flow is kept in exact integer cents — cross-engine-exact (the
+    oracle-checkable shape; SURVEY §7.4.1's "do no worse than the
+    reference's lossy i128" applied to doubles). The production shape for
+    this particular (algebraic) fold is plans.eventflow.flagship_user_netflow.
+    Expects columns: value (double, 2-decimal), sign (+1/-1)."""
 
     def init_state(self):
         return {"cents": 0, "n": 0}
@@ -377,60 +349,6 @@ def with_block_watermark(df: DataFrame, delay_blocks: int = 0) -> DataFrame:
     the source — SURVEY §7.4.5)."""
     wdf = df.withColumn("block_ts", F.timestamp_seconds(F.col("block_number") * 12))
     return wdf.withWatermark("block_ts", f"{delay_blocks * 12} seconds")
-
-
-def reduce_events_tws(
-    df: DataFrame, reducer: EventReducer, key_cols: list[str]
-) -> DataFrame:
-    """Streaming fold on the transformWithStateInPandas API (Spark 4's
-    successor to applyInPandasWithState: typed state variables, RocksDB-
-    backed). Same EventReducer contract; requires the RocksDB state store
-    provider (set by callers/tests via
-    spark.sql.streaming.stateStore.providerClass) AND the google.protobuf
-    package (the TWS state protocol is protobuf-based; absent in some
-    environments — ``reduce_events_stream`` is the dependency-free path)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    from ..shipping import ship_package
-
-    ship_package(df.sparkSession)
-
-    state_schema = reducer.state_schema()
-    out_schema = reducer.output_schema()
-    red = reducer
-
-    class ReducerProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("reducer_state", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                st = red.rows_to_state([tuple(self._state.get())])
-            else:
-                st = red.init_state()
-            # same cross-chunk ordering contract as reduce_events_stream:
-            # concatenate the trigger's chunks and sort once
-            pdfs = list(rows)
-            if pdfs:
-                whole = (
-                    pdfs[0] if len(pdfs) == 1 else pd.concat(pdfs, ignore_index=True)
-                )
-                st = red.reduce(st, _sort_batch(whole))
-            self._state.update(red.state_to_rows(st)[0])
-            yield red.emit(key, st)
-
-        def close(self) -> None:
-            pass
-
-    return df.groupBy(*key_cols).transformWithStateInPandas(
-        ReducerProcessor(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 class SequenceCountReducer(EventReducer):

@@ -98,6 +98,7 @@ def test_canary_fields_and_warning(tmp_path):
         "loadavg_start": [1.0, 1.0, 1.0],
         "loadavg_end": [2.0, 2.0, 2.0],
         "flagship_retime": 0.31,
+        "cpus": 32,  # the core count the loadavg values are calibrated on
     }
     line = bench.emit_record(timings, "0.1", detail_dir=str(tmp_path), canary=quiet)
     parsed = json.loads(line)
@@ -390,7 +391,8 @@ def test_drift_index_attributes_uniform_ambient_drift(tmp_path):
     # uniform 1.42x over blessed rows + one new (unblessed) row
     timings = {"row_a": 1.42, "row_b": 2.84, "row_c": 0.71, "row_new": 9.0}
     quiet = {"loadavg_start": [1.0] * 3, "loadavg_end": [2.0] * 3,
-             "flagship_retime": 0.31}
+             "flagship_retime": 0.31,
+             "cpus": 32}  # the core count the loadavg values are calibrated on
     line = bench.emit_record(
         timings, "0.1", detail_dir=str(tmp_path), canary=quiet
     )

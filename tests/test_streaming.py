@@ -227,90 +227,6 @@ def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_p
     assert got == expected
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithStateInPandas needs google.protobuf — verified absent "
-    "again this round (`import google.protobuf` -> ModuleNotFoundError) and the "
-    "environment forbids pip/apt installs, so the dependency cannot be added or "
-    "vendored; applyInPandasWithState covers the stateful contract here (its "
-    "stream==batch parity tests exercise the same reducer semantics)",
-)
-def test_reducer_tws_matches_batch(source_registered, eth_logs_fixture, tmp_path):
-    """B10 on transformWithStateInPandas (RocksDB state store): same state
-    as the batch fold."""
-    spark = source_registered
-    fx, path = eth_logs_fixture
-    from eth_event_stream_spark.streaming.reducer import reduce_events_tws
-
-    prepared = _prep_cents
-
-    batch = (
-        spark.read.format("eth_logs")
-        .option("path", path)
-        .option("from_block", fx.from_block)
-        .option("to_block", fx.to_block)
-        .option("fail_on_removed", "false")
-        .load()
-    )
-    expected = {
-        r["key"]: (r["net_cents"], r["n_events"])
-        for r in reduce_events_batch(prepared(batch), CentsNetflowReducer(), ["key"]).collect()
-    }
-
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", "")
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = (
-            spark.readStream.format("eth_logs")
-            .option("path", path)
-            .option("from_block", fx.from_block)
-            .option("to_block", fx.to_block)
-            .option("block_step", 30)
-            .option("confirmation_blocks", 0)
-            .option("fail_on_removed", "false")
-            .load()
-        )
-        sdf = reduce_events_tws(prepared(stream), CentsNetflowReducer(), ["key"])
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName("tws_sink")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        if prev:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    rows = spark.sql(
-        """
-        SELECT key, net_cents, n_events FROM (
-          SELECT *, ROW_NUMBER() OVER (PARTITION BY key ORDER BY mono DESC) rn
-          FROM (SELECT *, monotonically_increasing_id() AS mono FROM tws_sink)
-        ) WHERE rn = 1
-        """
-    ).collect()
-    got = {r["key"]: (r["net_cents"], r["n_events"]) for r in rows}
-    assert got == expected
-
-
 def test_stream_watermark_window_dedup(source_registered, eth_logs_fixture, tmp_path):
     """Event-time path: block-derived watermark + dropDuplicatesWithinWatermark
     + tumbling window agg over the stream equals the batch computation."""
@@ -1032,9 +948,21 @@ def test_retry_fails_fast_on_deterministic_error(tmp_path, monkeypatch):
     assert calls["n"] == 1
 
 
-def test_batch_reader_honors_retry_options(tmp_path, monkeypatch):
-    """EthLogBatchReader.read forwards retry_attempts/retry_base_ms to the
-    fetch (previously only the stream reader did)."""
+def _reader_and_chunks(bs, kind: str, options: dict, lo: int, hi: int):
+    """The batch or stream reader and its ``partitions()`` over [lo, hi)."""
+    if kind == "batch":
+        reader = bs.EthLogBatchReader(
+            dict(options, from_block=str(lo), to_block=str(hi - 1))
+        )
+        return reader, reader.partitions()
+    reader = bs.EthLogStreamReader(options)
+    return reader, reader.partitions({"block": lo}, {"block": hi})
+
+
+@pytest.mark.parametrize("kind", ["batch", "stream"])
+def test_reader_honors_retry_options(tmp_path, monkeypatch, kind):
+    """Both readers' read() forwards retry_attempts/retry_base_ms to the
+    fetch (the batch reader once hardcoded the default)."""
     from eth_event_stream_spark.sources import block_source as bs
 
     path = str(tmp_path / "logs.parquet")
@@ -1046,14 +974,31 @@ def test_batch_reader_honors_retry_options(tmp_path, monkeypatch):
         raise OSError("down")
 
     monkeypatch.setattr(bs, "_fetch_table", always_down)
-    reader = bs.EthLogBatchReader(
-        {"path": path, "to_block": "9", "retry_attempts": "2",
-         "retry_base_ms": "1"}
-    )
-    [part] = reader.partitions()
+    options = {"path": path, "retry_attempts": "2", "retry_base_ms": "1"}
+    reader, [part] = _reader_and_chunks(bs, kind, options, 0, 10)
     with pytest.raises(OSError):
         list(reader.read(part))
     assert calls["n"] == 2  # option-configured, not the hardcoded 4
+
+
+@pytest.mark.parametrize("lo", [0, 7])
+def test_batch_and_stream_readers_cut_the_same_aligned_chunks(tmp_path, lo):
+    """One chunk rule for both readers: [lo, 22) with block_step=5 is cut on
+    ABSOLUTE multiples of 5 — the first chunk may be short — whether the
+    range comes from a batch scan or a micro-batch, so a replayed range
+    maps onto the same block buckets either way."""
+    from eth_event_stream_spark.sources import block_source as bs
+
+    options = {"path": str(tmp_path / "logs.parquet"), "block_step": "5"}
+    bounds = {
+        kind: [(p.lo, p.hi) for p in _reader_and_chunks(bs, kind, options, lo, 22)[1]]
+        for kind in ("batch", "stream")
+    }
+    expected = {
+        0: [(0, 5), (5, 10), (10, 15), (15, 20), (20, 22)],
+        7: [(7, 10), (10, 15), (15, 20), (20, 22)],
+    }[lo]
+    assert bounds["batch"] == bounds["stream"] == expected
 
 
 def test_retry_fails_fast_on_missing_file(tmp_path, monkeypatch):
