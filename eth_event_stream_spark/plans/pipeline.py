@@ -1421,13 +1421,12 @@ def reducer_funnel_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def reducer_netflow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The stateful EventReducer API (sink.rs:125-151) in batch form:
-    applyInPandas folds block-sorted events per key. State arithmetic is in
-    integer cents — exact, so the Python fold matches the SQL oracle.
+    reduce_events_batch sorts each key's Arrow group once and folds it as
+    one pandas frame. State arithmetic is in integer cents — exact, so the
+    Python fold matches the SQL oracle.
 
     Here to exercise the stateful path end-to-end; the algebraic equivalent
     (flagship_user_netflow) is the production shape for this fold."""
-    import pandas as pd
-
     from ..streaming.reducer import CentsNetflowReducer, reduce_events_batch
 
     ev = t(spark, sf_dir, "events").select(
@@ -1453,11 +1452,12 @@ def reducer_netflow_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def reducer_netflow_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """reducer_netflow_batch's Arrow twin: the same keyed fold over
-    applyInArrow (ArrowEventReducer), skipping the per-group Arrow->pandas
-    materialization — the cheaper floor when the fold itself is columnar.
-    Same oracle as the pandas path: the two must agree bit-for-bit."""
-    from ..streaming.reducer import CentsNetflowArrowReducer, reduce_events_batch_arrow
+    """reducer_netflow_batch's Arrow twin: the same driver and keyed fold,
+    but an ArrowEventReducer folds each sorted group as a pyarrow.Table,
+    skipping the per-group Arrow->pandas conversion — the cheaper floor
+    when the fold itself is columnar. Same oracle as the pandas path: the
+    two must agree bit-for-bit."""
+    from ..streaming.reducer import CentsNetflowArrowReducer, reduce_events_batch
 
     ev = t(spark, sf_dir, "events").select(
         F.col("user_id"),
@@ -1466,7 +1466,7 @@ def reducer_netflow_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.unix_timestamp("ts")).alias("block_number"),
         F.col("event_id").alias("log_index"),
     )
-    return reduce_events_batch_arrow(ev, CentsNetflowArrowReducer(), ["user_id"])
+    return reduce_events_batch(ev, CentsNetflowArrowReducer(), ["user_id"])
 
 
 @register(

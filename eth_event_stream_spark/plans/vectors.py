@@ -430,20 +430,7 @@ def ivf_build_centroids(
                     diff = E[:, d, None] - C[None, :, d]
                     acc += diff * diff
                 assign = np.argmin(acc, axis=1)
-                V = E * 1e6
-                scaled = np.rint(V).astype(np.int64)  # half-to-even bulk
-                near_half = np.argwhere(
-                    np.abs(V - np.floor(V) - 0.5) < 1e-9
-                )
-                if near_half.size:  # exact HALF_UP on the rare suspects
-                    from decimal import ROUND_HALF_UP, Decimal
-
-                    for i, j in near_half:
-                        scaled[i, j] = int(
-                            Decimal(repr(V[i, j])).quantize(
-                                Decimal(1), rounding=ROUND_HALF_UP
-                            )
-                        )
+                scaled = _half_up_micro(E * 1e6)
                 psum = np.zeros((K, D), dtype=np.int64)
                 pcount = np.zeros(K, dtype=np.int64)
                 np.add.at(psum, assign, scaled)
@@ -824,11 +811,20 @@ def _sql_pq_search(rounds: int) -> str:
 def _half_up_micro(V):
     """int64 of Spark's ``ROUND(x, 0)`` (Java HALF_UP on the shortest
     decimal repr) applied to an ndarray: bulk ``np.rint`` (half-to-even),
-    then the rare exact-half suspects fixed with decimal-on-repr — the
-    same reproduction the ivf_build_centroids kernel carries inline,
-    pinned there by the near-half adversary gate."""
+    then the rare exact-half suspects fixed with decimal-on-repr. The one
+    HALF_UP reproduction behind the Lloyd (ivf_build_centroids) and PQ
+    kernels, pinned by their near-half adversary gates.
+
+    Finite-input contract: NaN or Inf raises ``ValueError``. The int64
+    cast would turn it into INT64_MIN, which wins every argmin, where the
+    SQL form it replaces yields NULL."""
     import numpy as np
 
+    if not np.isfinite(V).all():
+        raise ValueError(
+            "HALF_UP kernel input holds NaN or Inf (a null or non-finite "
+            "embedding element?): embeddings must be finite"
+        )
     scaled = np.rint(V).astype(np.int64)
     near_half = np.argwhere(np.abs(V - np.floor(V) - 0.5) < 1e-9)
     if near_half.size:

@@ -1,23 +1,27 @@
 """Stateful reducer API — the reference ``EventReducer`` trait, Spark-first.
 
 The reference folds reducers over dense, block-sorted event batches
-(/root/reference/eth_event_stream/src/sink.rs:125-151: ``reduce(&mut self,
-block_number, ordered_events)``), with state living in the reducer struct.
+(``src/sink.rs:125-151``: ``reduce(&mut self, block_number,
+ordered_events)``), with state living in the reducer struct.
 
 Spark decomposition (SURVEY §7.4.3):
 
 - **Algebraic folds** (netflow, counters) degenerate to ``groupBy().agg()`` —
   use the plans layer; never pay for ordered state you don't need.
-- **Order-dependent / general state** uses this module, one driver per mode:
+- **Order-dependent / general state** uses this module: one reducer
+  contract, one driver per mode:
   - streaming: ``reduce_events_stream`` — ``applyInPandasWithState`` keyed
     by a partition key, each micro-batch delivering block-sorted rows to
-    ``EventReducer.reduce`` (no dependency beyond pandas/pyarrow);
-  - batch: ``reduce_events_batch`` — ``applyInPandas`` over the same key
-    with an in-group sort. The identical reducer code runs in both (the
-    reference's historical/live unification);
-  - ``reduce_events_batch_arrow`` runs an ``ArrowEventReducer`` (the same
-    contract over ``pyarrow.Table``) on ``applyInArrow``, skipping the
-    pandas conversion.
+    ``EventReducer.reduce`` (``transformWithState*`` would need
+    ``google.protobuf``; this API needs nothing beyond pandas/pyarrow);
+  - batch: ``reduce_events_batch`` — ``applyInArrow`` over the same key.
+    Each group's Arrow table is sorted once, then folded as is by an
+    ``ArrowEventReducer`` or handed to an ``EventReducer`` as one pandas
+    frame. The identical ``EventReducer`` code runs in both modes (the
+    reference's historical/live unification).
+
+Both drivers need a ``block_number`` column (the fold order; ``log_index``
+breaks ties when present) and raise ``ValueError`` without one.
 
 State is partitioned by ``key_cols`` — the scale contract: the reference's
 single ``Arc<Mutex<State>>`` becomes N independent shards; anything global
@@ -30,6 +34,7 @@ from abc import ABC, abstractmethod
 from typing import Any, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -42,19 +47,23 @@ class EventReducer(ABC):
     ``reduce`` sees one key's events for a contiguous, sorted span of blocks
     (the reference calls per block; batching blocks per invocation is the
     vectorized equivalent — order within and across calls is preserved).
+
+    State is a dict keyed by ``state_schema().names``; the state-store
+    codec (``state_to_rows`` / ``rows_to_state``) derives from that schema.
     """
 
     @abstractmethod
-    def init_state(self) -> Any: ...
+    def init_state(self) -> dict: ...
 
     @abstractmethod
-    def reduce(self, state: Any, events: pd.DataFrame) -> Any:
+    def reduce(self, state: dict, events: pd.DataFrame) -> dict:
         """Fold block-sorted events into state; return the new state."""
 
     @abstractmethod
-    def emit(self, key: tuple, state: Any) -> pd.DataFrame:
+    def emit(self, key: tuple, state: dict) -> pd.DataFrame:
         """Current aggregate rows for this key (the live-monitor read side,
-        examples/stream_multi.rs:116-143)."""
+        examples/stream_multi.rs:116-143); ``key`` holds plain Python
+        values."""
 
     @abstractmethod
     def state_schema(self) -> StructType: ...
@@ -62,16 +71,77 @@ class EventReducer(ABC):
     @abstractmethod
     def output_schema(self) -> StructType: ...
 
-    @abstractmethod
-    def state_to_rows(self, state: Any) -> list[tuple]: ...
+    def _state_names(self) -> list[str]:
+        # state_schema() parses DDL on the JVM, which Python workers lack:
+        # the first call (reduce_events_stream makes it on the driver)
+        # caches the names on the instance, and they ship with it
+        names = self.__dict__.get("_names")
+        if names is None:
+            names = self._names = self.state_schema().names
+        return names
+
+    def state_to_rows(self, state: dict) -> list[tuple]:
+        return [tuple(state[n] for n in self._state_names())]
+
+    def rows_to_state(self, rows: list[tuple]) -> dict:
+        """Inverse of ``state_to_rows``. Checkpoint-compat: a row written
+        under an older, shorter state schema restores its missing trailing
+        fields as None (e.g. FunnelReducer's later ``m`` lane, whose guard
+        re-arms on the next block). Where Spark's state-store schema check
+        refuses the widening, start a fresh checkpoint: the fold replays
+        from the source's block frontier."""
+        row = rows[0]
+        return {
+            n: row[i] if i < len(row) else None
+            for i, n in enumerate(self._state_names())
+        }
+
+
+class ArrowEventReducer(ABC):
+    """The EventReducer contract over Arrow data — same fold semantics
+    (init -> reduce over block-sorted events -> emit), but ``reduce`` sees a
+    ``pyarrow.Table`` and ``emit`` returns one. Skips the Arrow->pandas
+    materialization (index build, block consolidation, object boxing for
+    strings) — the fold itself runs on the same Arrow buffers Spark
+    transferred. Batch only: the streaming driver is pandas-based."""
 
     @abstractmethod
-    def rows_to_state(self, rows: list[tuple]) -> Any: ...
+    def init_state(self) -> Any: ...
+
+    @abstractmethod
+    def reduce(self, state: Any, events: pa.Table) -> Any:
+        """Fold block-sorted events into state; return the new state."""
+
+    @abstractmethod
+    def emit(self, key: tuple, state: Any) -> pa.Table:
+        """Current aggregate rows for this key (``key`` holds plain Python
+        values)."""
+
+    @abstractmethod
+    def output_schema(self) -> StructType: ...
+
+
+def _prepare(df: DataFrame) -> None:
+    if "block_number" not in df.columns:
+        raise ValueError(
+            "reducer input has no block_number column: reduce() must see "
+            "each key's events in block order, so the drivers sort on it"
+        )
+    from ..shipping import ship_package
+
+    ship_package(df.sparkSession)
+
+
+def _sort_cols(cols) -> list[str]:
+    return [c for c in ("block_number", "log_index") if c in cols]
 
 
 def _sort_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    cols = [c for c in ("block_number", "log_index") if c in pdf.columns]
-    return pdf.sort_values(cols) if cols else pdf
+    return pdf.sort_values(_sort_cols(pdf.columns))
+
+
+def _sort_table(tbl: pa.Table) -> pa.Table:
+    return tbl.sort_by([(c, "ascending") for c in _sort_cols(tbl.column_names)])
 
 
 def reduce_events_stream(
@@ -83,10 +153,8 @@ def reduce_events_stream(
     aggregates. Exactly the consumer loop of sink.rs:134-151 with Spark's
     state store replacing the Arc<Mutex<..>>.
     """
-
-    from ..shipping import ship_package
-
-    ship_package(df.sparkSession)
+    _prepare(df)
+    reducer._state_names()  # resolve on the driver; see _state_names
 
     def fn(
         key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
@@ -119,18 +187,31 @@ def reduce_events_stream(
 
 
 def reduce_events_batch(
-    df: DataFrame, reducer: EventReducer, key_cols: list[str]
+    df: DataFrame, reducer: EventReducer | ArrowEventReducer, key_cols: list[str]
 ) -> DataFrame:
-    """Batch fold: the SAME reducer over applyInPandas (historical drain)."""
-    from ..shipping import ship_package
+    """Batch fold (historical drain) over applyInArrow: per group, sort the
+    Arrow table once and fold it from ``init_state()``. An
+    ``ArrowEventReducer`` folds the table itself; an ``EventReducer`` gets
+    one ``to_pandas()`` frame, and its ``emit`` frame goes back to Arrow
+    once, typed by ``output_schema()``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    ship_package(df.sparkSession)
+    _prepare(df)
+    schema = reducer.output_schema()
+    arrow = isinstance(reducer, ArrowEventReducer)
+    arrow_schema = None if arrow else to_arrow_schema(schema)
 
-    def fn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        st = reducer.reduce(reducer.init_state(), _sort_batch(pdf))
-        return reducer.emit(key, st)
+    def fn(key: tuple, tbl: pa.Table) -> pa.Table:
+        key = tuple(k.as_py() for k in key)
+        events = _sort_table(tbl)
+        if arrow:
+            return reducer.emit(key, reducer.reduce(reducer.init_state(), events))
+        st = reducer.reduce(reducer.init_state(), events.to_pandas())
+        return pa.Table.from_pandas(
+            reducer.emit(key, st), schema=arrow_schema, preserve_index=False
+        )
 
-    return df.groupBy(*key_cols).applyInPandas(fn, schema=reducer.output_schema())
+    return df.groupBy(*key_cols).applyInArrow(fn, schema=schema)
 
 
 class CentsNetflowReducer(EventReducer):
@@ -161,12 +242,6 @@ class CentsNetflowReducer(EventReducer):
 
     def output_schema(self) -> StructType:
         return StructType.fromDDL("key BIGINT, net_cents BIGINT, n_events BIGINT")
-
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["cents"], state["n"])]
-
-    def rows_to_state(self, rows) -> Any:
-        return {"cents": rows[0][0], "n": rows[0][1]}
 
 
 class FunnelReducer(EventReducer):
@@ -237,74 +312,6 @@ class FunnelReducer(EventReducer):
             "t_purchase_us BIGINT"
         )
 
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["v"], state["c"], state["p"], state["m"])]
-
-    def rows_to_state(self, rows) -> Any:
-        row = rows[0]
-        return {
-            "v": row[0],
-            "c": row[1],
-            "p": row[2],
-            # Checkpoint-compat: round-6 added the max-block lane ``m`` as a
-            # 4th state column. A checkpoint written under the 3-column
-            # schema restores with m=None — the in-order guard re-arms on
-            # the next folded block instead of failing the restore. (Spark's
-            # state-store schema check must also accept the widening; where
-            # it refuses, the documented path is a fresh checkpoint — the
-            # fold itself is replayable from the source's block frontier.)
-            "m": row[3] if len(row) > 3 else None,
-        }
-
-
-class ArrowEventReducer(ABC):
-    """The EventReducer contract over Arrow data — same fold semantics
-    (init -> reduce over block-sorted events -> emit), but ``reduce`` sees a
-    ``pyarrow.Table`` and ``emit`` returns one. Skips the Arrow->pandas
-    materialization ``applyInPandas`` pays on every group (index build,
-    block consolidation, object boxing for strings) — the fold itself runs
-    on the same Arrow buffers Spark transferred."""
-
-    @abstractmethod
-    def init_state(self) -> Any: ...
-
-    @abstractmethod
-    def reduce(self, state: Any, events: "pa.Table") -> Any:
-        """Fold block-sorted events into state; return the new state."""
-
-    @abstractmethod
-    def emit(self, key: tuple, state: Any) -> "pa.Table":
-        """Current aggregate rows for this key (``key`` is a tuple of
-        ``pyarrow.Scalar``)."""
-
-    @abstractmethod
-    def output_schema(self) -> StructType: ...
-
-
-def _sort_table(tbl: "pa.Table") -> "pa.Table":
-    cols = [c for c in ("block_number", "log_index") if c in tbl.column_names]
-    return tbl.sort_by([(c, "ascending") for c in cols]) if cols else tbl
-
-
-def reduce_events_batch_arrow(
-    df: DataFrame, reducer: ArrowEventReducer, key_cols: list[str]
-) -> DataFrame:
-    """Batch fold over ``applyInArrow`` — the keyed-state shape of
-    ``reduce_events_batch`` without the pandas conversion floor.
-
-    Same scale contract: state shards by ``key_cols``, each task folds its
-    keys' sorted rows; Arrow batches go worker->Python with zero-copy column
-    access, so the per-group overhead is the fold itself."""
-    from ..shipping import ship_package
-
-    ship_package(df.sparkSession)
-
-    def fn(key: tuple, tbl: "pa.Table") -> "pa.Table":
-        st = reducer.reduce(reducer.init_state(), _sort_table(tbl))
-        return reducer.emit(key, st)
-
-    return df.groupBy(*key_cols).applyInArrow(fn, schema=reducer.output_schema())
-
 
 class CentsNetflowArrowReducer(ArrowEventReducer):
     """Arrow twin of CentsNetflowReducer: identical integer-cents state
@@ -315,8 +322,7 @@ class CentsNetflowArrowReducer(ArrowEventReducer):
     def init_state(self):
         return {"cents": 0, "n": 0}
 
-    def reduce(self, state, events: "pa.Table"):
-        import pyarrow as pa
+    def reduce(self, state, events: pa.Table):
         import pyarrow.compute as pc
 
         cents = pc.cast(
@@ -328,12 +334,10 @@ class CentsNetflowArrowReducer(ArrowEventReducer):
         state["n"] += events.num_rows
         return state
 
-    def emit(self, key, state) -> "pa.Table":
-        import pyarrow as pa
-
+    def emit(self, key, state) -> pa.Table:
         return pa.table(
             {
-                "key": pa.array([key[0].as_py()], pa.int64()),
+                "key": pa.array([key[0]], pa.int64()),
                 "net_cents": pa.array([state["cents"]], pa.int64()),
                 "n_events": pa.array([state["n"]], pa.int64()),
             }
@@ -392,9 +396,3 @@ class SequenceCountReducer(EventReducer):
 
     def output_schema(self) -> StructType:
         return StructType.fromDDL("key BIGINT, n_matches BIGINT, n_events BIGINT")
-
-    def state_to_rows(self, state) -> list[tuple]:
-        return [(state["last_type"], state["n_matches"], state["n"])]
-
-    def rows_to_state(self, rows) -> Any:
-        return {"last_type": rows[0][0], "n_matches": rows[0][1], "n": rows[0][2]}

@@ -761,6 +761,29 @@ def test_arrow_pq_kernel_matches_expression_tower(spark, sf_dir, case, rounds):
         assert all(c != 3 for _, _, c in ck), "no code may point at it"
 
 
+@pytest.mark.parametrize("build", ["lloyd", "pq"])
+@pytest.mark.parametrize("bad", [float("nan"), None], ids=["nan", "null"])
+def test_arrow_kernels_reject_non_finite_embeddings(spark, sf_dir, build, bad):
+    """Adversary for both Arrow build kernels: one NaN (or null) embedding
+    element must fail the build loudly. Before the finite-input check in
+    _half_up_micro it became INT64_MIN in the member sums (and in the PQ
+    argmin key), silently skewing centroids and codes, where the replaced
+    SQL towers gave NULL."""
+    from eth_event_stream_spark.plans.vectors import _pq_codes, ivf_build_centroids
+
+    dim = 2 if build == "lloyd" else 64
+    rows = [(i, [0.01 * i] * dim) for i in range(1, 12)]
+    rows.append((50, [bad] + [0.02] * (dim - 1)))
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="embeddings must be finite"):
+        if build == "lloyd":
+            ivf_build_centroids(spark, sf_dir, e=e).collect()
+        else:
+            codes, cb, _ = _pq_codes(spark, sf_dir, rounds=1, e=e)
+            codes.collect()
+            cb.collect()
+
+
 def test_half_up_micro_matches_spark_round(spark):
     """Pins _half_up_micro — the kernel-side reproduction of Spark's
     ROUND(x, 0) used for BOTH rounding layers of the PQ build (member
@@ -791,3 +814,6 @@ def test_half_up_micro_matches_spark_round(spark):
     assert got_kernel == got_spark, list(
         (v, s, k) for v, s, k in zip(vals, got_spark, got_kernel) if s != k
     )
+    for bad in (math.nan, math.inf, -math.inf):
+        with pytest.raises(ValueError, match="embeddings must be finite"):
+            _half_up_micro(np.array([1.5, bad]))

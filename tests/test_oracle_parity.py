@@ -165,11 +165,3 @@ def test_query_matches_oracle(spark, sf_dir, name):
         (a, b) for a, b in zip(s_rows, d_rows) if a != b
     ]
     assert not mismatches, f"{name}: {len(mismatches)} differing rows; first: {mismatches[0]}"
-
-
-@pytest.mark.slow  # exhaustive all-282-query schema sweep (~106 s) — full tier
-def test_all_queries_have_unique_columns(spark, sf_dir):
-    """Guard: duplicate column names break the driver's sort-by-name hash."""
-    for name, q in QUERIES.items():
-        cols = q.fn(spark, sf_dir).columns
-        assert len(cols) == len(set(cols)), f"{name}: duplicate columns {cols}"

@@ -18,7 +18,10 @@ from eth_event_stream_spark.plans import QUERIES
 
 
 def plan_of(spark, sf_dir, name: str) -> str:
-    df = QUERIES[name].fn(spark, sf_dir)
+    return _formatted_plan(QUERIES[name].fn(spark, sf_dir))
+
+
+def _formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
@@ -624,25 +627,41 @@ FACT_TABLES = ("lineitem", "orders", "events", "documents", "embeddings")
 GLOBAL_WINDOW_ALLOWED = {"pack_sequences_unsharded_baseline"}
 
 
-@pytest.mark.slow  # exhaustive all-282-query plan sweep (~110 s) — full tier
-def test_no_registered_query_globally_windows_a_fact_table(spark, sf_dir):
-    """Registry-wide structural gate: NO registered query may run a window
-    over a SinglePartition exchange while scanning a fact table — the
-    whole-corpus-through-one-task funnel. Dim-only global windows (quartiles
-    over customer, say) are tolerated; fact-table ones must either be
-    rewritten or registered under an explicit *_baseline name."""
-    offenders = []
+def test_registry_sweep_invariants(spark, sf_dir):
+    """Registry-wide structural gates, one pass: every registered query is
+    built and planned ONCE, and three invariants are checked on it.
+
+    - Unique column names: duplicates break the driver's sort-by-name hash.
+    - No CartesianProduct — the physical operator Spark falls back to when
+      a join has no keys AND neither side is broadcastable, which is
+      all-pairs-shuffled quadratic work at any real scale. Every legitimate
+      small-side cross join in this repo (query vectors, centroid tables,
+      scalar thresholds) must stay a BroadcastNestedLoopJoin; if size
+      estimation ever degrades one, this catches it for ALL queries, not
+      just the plan-gated subset.
+    - No window over a SinglePartition exchange while scanning a fact table
+      — the whole-corpus-through-one-task funnel. Dim-only global windows
+      (quartiles over customer, say) are tolerated; fact-table ones must
+      either be rewritten or registered under an explicit *_baseline name.
+    """
+    cartesian, global_windows = [], []
     for name, q in sorted(QUERIES.items()):
+        df = q.fn(spark, sf_dir)
+        cols = df.columns
+        assert len(cols) == len(set(cols)), f"{name}: duplicate columns {cols}"
+        p = _formatted_plan(df)
+        if "CartesianProduct" in p:
+            cartesian.append(name)
         if name in GLOBAL_WINDOW_ALLOWED:
             assert "baseline" in name, f"{name}: allowlisted without _baseline name"
             continue
-        p = plan_of(spark, sf_dir, name)
         if _single_partition_windows(p):
             facts = [t for t in FACT_TABLES if f"{t}.parquet" in p]
             if facts:
-                offenders.append((name, facts))
-    assert not offenders, (
-        f"global (SinglePartition) windows over fact tables: {offenders}"
+                global_windows.append((name, facts))
+    assert not cartesian, f"CartesianProduct planned in: {cartesian}"
+    assert not global_windows, (
+        f"global (SinglePartition) windows over fact tables: {global_windows}"
     )
 
 
@@ -843,24 +862,6 @@ def test_runtime_bloom_filter_injects_on_shuffled_fact_fact_join(spark, sf_dir):
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
-
-
-@pytest.mark.slow  # exhaustive all-282-query plan sweep (~95 s) — full tier
-def test_no_registered_query_plans_a_cartesian_product(spark, sf_dir):
-    """Registry-wide scale gate: no registered query may plan a
-    CartesianProduct — the physical operator Spark falls back to when a
-    join has no keys AND neither side is broadcastable, which is
-    all-pairs-shuffled quadratic work at any real scale. Every legitimate
-    small-side cross join in this repo (query vectors, centroid tables,
-    scalar thresholds) must stay a BroadcastNestedLoopJoin; if size
-    estimation ever degrades one into a CartesianProduct, this catches it
-    for ALL queries, not just the plan-gated subset."""
-    offenders = []
-    for name in sorted(QUERIES):
-        p = plan_of(spark, sf_dir, name)
-        if "CartesianProduct" in p:
-            offenders.append(name)
-    assert not offenders, f"CartesianProduct planned in: {offenders}"
 
 
 def test_profile_stats_single_scan(spark, sf_dir):

@@ -165,7 +165,7 @@ def _prep_cents(df):
 
 def test_reducer_stream_matches_batch(source_registered, eth_logs_fixture, tmp_path):
     """B10: the SAME reducer over applyInPandasWithState (stream) and
-    applyInPandas (batch) produces identical state."""
+    applyInArrow (batch) produces identical state."""
     spark = source_registered
     fx, path = eth_logs_fixture
 
@@ -1695,23 +1695,99 @@ def test_stream_cdc_chunking_parity(spark, sf_dir, tmp_path):
     assert got == expected
 
 
-def test_funnel_reducer_restores_legacy_3col_state():
-    """A checkpoint written before the in-order guard stored 3-column
-    funnel state (v, c, p — no max-block lane). rows_to_state must restore
-    it with m=None (guard re-arms on the next folded block) instead of
-    crashing the resumed query on an IndexError."""
-    from eth_event_stream_spark.streaming.reducer import FunnelReducer
-
-    r = FunnelReducer()
-    legacy = r.rows_to_state([(100, 200, None)])
-    assert legacy == {"v": 100, "c": 200, "p": None, "m": None}
-    modern = r.rows_to_state([(100, 200, None, 250)])
-    assert modern == {"v": 100, "c": 200, "p": None, "m": 250}
-    # and the restored legacy state folds on without tripping the guard
+@pytest.mark.parametrize(
+    "reducer_cls,state,legacy_row,restored",
+    [
+        pytest.param(
+            "FunnelReducer",
+            {"v": 100, "c": 200, "p": None, "m": 250},
+            (100, 200, None),
+            {"v": 100, "c": 200, "p": None, "m": None},
+            id="FunnelReducer",
+        ),
+        pytest.param(
+            "CentsNetflowReducer",
+            {"cents": -1250, "n": 7},
+            (-1250,),
+            {"cents": -1250, "n": None},
+            id="CentsNetflowReducer",
+        ),
+        pytest.param(
+            "SequenceCountReducer",
+            {"last_type": "view", "n_matches": 3, "n": 9},
+            ("view", 3),
+            {"last_type": "view", "n_matches": 3, "n": None},
+            id="SequenceCountReducer",
+        ),
+    ],
+)
+def test_reducer_state_codec_restores_legacy_rows(
+    spark, reducer_cls, state, legacy_row, restored
+):
+    """The state-store codec every EventReducer inherits from its
+    state_schema(): state round-trips through state_to_rows/rows_to_state,
+    and a row checkpointed under an older, shorter schema restores its
+    missing trailing fields as None instead of crashing the resumed query
+    on an IndexError (FunnelReducer's pre-guard 3-column state is the real
+    case: m=None re-arms the in-order guard on the next folded block)."""
     import pandas as pd
 
-    out = r.reduce(legacy, pd.DataFrame({"block_number": [300], "event_type": ["purchase"]}))
-    assert out["p"] == 300 and out["m"] == 300
+    from eth_event_stream_spark.streaming import reducer as rmod
+
+    r = getattr(rmod, reducer_cls)()
+    rows = r.state_to_rows(state)
+    assert rows == [tuple(state.values())]
+    assert r.rows_to_state(rows) == state
+    assert r.rows_to_state([legacy_row]) == restored
+    if reducer_cls == "FunnelReducer":
+        # the restored legacy state folds on without tripping the guard
+        out = r.reduce(
+            r.rows_to_state([legacy_row]),
+            pd.DataFrame({"block_number": [300], "event_type": ["purchase"]}),
+        )
+        assert out["p"] == 300 and out["m"] == 300
+
+
+def test_reduce_events_batch_runs_pandas_and_arrow_reducers_alike(spark, sf_dir):
+    """One batch driver for both reducer flavours: the pandas
+    CentsNetflowReducer and its Arrow twin give identical rows through
+    reduce_events_batch (reducer_netflow_batch's input projection)."""
+    from eth_event_stream_spark.streaming.reducer import CentsNetflowArrowReducer
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
+        "user_id",
+        "value",
+        F.when(F.col("event_type") == "purchase", -1).otherwise(1).alias("sign"),
+        F.unix_timestamp("ts").alias("block_number"),
+        F.col("event_id").alias("log_index"),
+    )
+    rows = {
+        type(r).__name__: sorted(
+            tuple(x) for x in reduce_events_batch(ev, r, ["user_id"]).collect()
+        )
+        for r in (CentsNetflowReducer(), CentsNetflowArrowReducer())
+    }
+    assert rows["CentsNetflowReducer"], "empty fold; parity would be vacuous"
+    assert rows["CentsNetflowReducer"] == rows["CentsNetflowArrowReducer"]
+
+
+def test_reducer_drivers_require_block_number(spark):
+    """Both drivers refuse input without block_number instead of folding
+    events in arrival order: order-sensitive reducers (funnel, sequence)
+    would otherwise return wrong rows silently."""
+    from eth_event_stream_spark.streaming.reducer import FunnelReducer
+
+    batch = spark.createDataFrame(
+        [(1, "view", 0), (1, "click", 1)],
+        "user_id long, event_type string, log_index long",
+    )
+    with pytest.raises(ValueError, match="block_number"):
+        reduce_events_batch(batch, FunnelReducer(), ["user_id"])
+    stream = (
+        spark.readStream.format("rate").load().withColumnRenamed("value", "user_id")
+    )
+    with pytest.raises(ValueError, match="block_number"):
+        reduce_events_stream(stream, FunnelReducer(), ["user_id"])
 
 
 def test_countmin_sketch_stream_matches_batch(spark, sf_dir, tmp_path):
